@@ -3,6 +3,7 @@ package graft
 import graft.functions.GraftFunctions
 import graft.ops.{Dedup, Multimodal, Similarity, TextAnalysis}
 import graft.sources.DocCorpus
+import graft.util.Materialize
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -43,15 +44,16 @@ object SparkEntry {
     // fused into that one task (er_match_edges measured 5.3 s wall =
     // ~one core's worth of work while 31 cores idled). One shuffle of
     // the 15k-row block table buys full parallelism for the ~0.9M-pair
-    // fan-out; the build side is pinned broadcast so the exchange
-    // cannot land on the hash side instead. EXPLICIT partition count:
+    // fan-out; the build side is hinted shuffle-hash (the block table
+    // grows with the input, so it is never pinned broadcast) and is
+    // shuffled to the stream side's layout. EXPLICIT partition count:
     // AQE sizes post-shuffle partitions from the shuffle's ~300 KB,
     // not the ×60 fan-out behind it, and coalesced this exchange back
     // to one partition — a user-numbered repartition is exempt.
     val l = b.repartition(b.sparkSession.sessionState.conf.numShufflePartitions,
       col("bkey")).select(col("bkey"), col("doc_id").as("doc_a"))
     val r = b.select(col("bkey"), col("doc_id").as("doc_b"))
-    l.join(broadcast(r), Seq("bkey")).filter(col("doc_a") < col("doc_b"))
+    l.join(r.hint("shuffle_hash"), Seq("bkey")).filter(col("doc_a") < col("doc_b"))
   }
 
   private def erScored(c: DataFrame): DataFrame = {
@@ -215,7 +217,7 @@ object SparkEntry {
         .agg(count(lit(1)).as("n")).select(lit("without_orders").as("k"), col("n"))
       semi.unionAll(anti)
     }),
-    // --- A: aggregation + broadcast join + top-k ---
+    // --- A: aggregation + join + top-k ---
     "q_join_topk" -> ((s, dir) => {
       implicit val sp: SparkSession = s
       val top = t(dir, "orders")
@@ -223,7 +225,8 @@ object SparkEntry {
           min("o_orderkey").as("first_order"))
         .orderBy(col("n_orders").desc, col("o_custkey").asc)
         .limit(10)
-      top.join(broadcast(t(dir, "customer")),
+      // shuffle-hash, not broadcast: the customer table grows with sf
+      top.join(t(dir, "customer").hint("shuffle_hash"),
           top("o_custkey") === col("c_custkey"), "left")
         .select(col("o_custkey"), col("n_orders"), col("first_order"),
           col("c_mktsegment"))
@@ -314,7 +317,7 @@ object SparkEntry {
       // just be re-scanned (cheaper than copying at scale); this input
       // is COMPUTED, so one materialization beats three evaluations.
       Dedup.embeddingNearDupPairs(
-        plantedEmbeddings(t(dir, "embeddings")).localCheckpoint(true),
+        Materialize(plantedEmbeddings(t(dir, "embeddings")), "dd_embed_planted", None)._1,
         tables = 6, planes = 8, threshold = 0.95, quantized = true,
         bounds = Dedup.BlockBounds(megaCap = Int.MaxValue))
     }),

@@ -2,6 +2,7 @@ package graft.assemble
 
 import graft.normalize.Normalize.spanText
 import graft.score.ErRule
+import graft.util.Materialize
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -255,8 +256,9 @@ object Assemble {
       numberEntities: Boolean = true,
       ambiguousDocs: Option[DataFrame] = None,
       relatedAssignments: Option[DataFrame] = None,
-      /** Durable parquet snapshots for the two intra-assembly
-        * materializations (docs, entries) — executor-loss survival;
+      /** Tier of the two intra-assembly materializations (docs,
+        * entries), both through graft.util.Materialize: durable parquet
+        * snapshots under this dir (executor-loss survival) when set,
         * localCheckpoint otherwise. NOTE: a parquet round-trip does
         * not preserve the hash(entity_id) outputPartitioning that the
         * in-memory path exploits, so the durable path re-shuffles the
@@ -330,9 +332,8 @@ object Assemble {
       // uniform doc_id-keyed; skipping AQE here costs nothing
       .transform(d => graft.util.Confs.withConfs(d.sparkSession)(
         "spark.sql.adaptive.enabled" -> "false")(
-        graft.util.Confs.withJobDesc(d.sparkSession)("assemble_docs")(
-          // fanned into 3 aggregations below
-          graft.ops.Dedup.materializeTier(d, checkpointDir, "asm_docs"))))
+        // fanned into 3 aggregations below
+        Materialize(d, "asm_docs", checkpointDir)._1))
 
     // ---- FEATURES: variant groups per (entity, ftype, canon, usage) ----
     val baseEntries = docs
@@ -354,11 +355,10 @@ object Assemble {
     val entries = ambEntries.fold(baseEntries)(amb =>
         baseEntries.unionByName(amb).transform(d => d.repartition(
           d.sparkSession.sessionState.conf.numShufflePartitions, col("entity_id"))))
-      // AQE off for the same partitioning-capture reason as assemble_docs
+      // AQE off for the same partitioning-capture reason as asm_docs
       .transform(d => graft.util.Confs.withConfs(d.sparkSession)(
         "spark.sql.adaptive.enabled" -> "false")(
-        graft.util.Confs.withJobDesc(d.sparkSession)("assemble_entries")(
-          graft.ops.Dedup.materializeTier(d, checkpointDir, "asm_entries"))))
+        Materialize(d, "asm_entries", checkpointDir)._1))
 
     val perDesc = entries
       .groupBy("entity_id", "ftype", "canon", "usage", "desc")
@@ -606,10 +606,10 @@ object Assemble {
     // would mean 64 single-task range sorts at 10^9 entities).
     val nPart = if (partitions > 0) partitions
       else math.max(64, keys.sparkSession.sessionState.conf.numShufflePartitions)
-    val ranged = keys.select(keyCol).distinct()
+    // materialized: pins the (sampled) range boundaries
+    val (ranged, _) = Materialize(keys.select(keyCol).distinct()
       .repartitionByRange(nPart, col(keyCol))
-      .withColumn("_pid", spark_partition_id())
-      .localCheckpoint(true) // pin the (sampled) range boundaries
+      .withColumn("_pid", spark_partition_id()), "dense_ids", None)
     val counts = ranged.groupBy("_pid").agg(count(lit(1)).as("n"))
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
     val offsets = (0 until nPart).scanLeft(0L) {

@@ -1,8 +1,8 @@
 package graft.cluster
 
+import graft.util.Materialize
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Transitive clustering via alternating large-star / small-star
   * connected components on a DataFrame of match edges (Kiveris et al.,
@@ -21,14 +21,13 @@ import org.apache.spark.storage.StorageLevel
   * Scale notes:
   *  - min-per-neighborhood is a groupBy aggregate (partial map-side
   *    combine; never collects a neighborhood into one row);
-  *  - each iteration is checkpointed (localCheckpoint by default, or
-  *    a parquet snapshot via `checkpointDir` for resumability) to
-  *    truncate lineage — O(log n) iterations otherwise explode the
+  *  - each iteration is cut with graft.util.Materialize (in-memory by
+  *    default, a run-namespaced parquet snapshot under `checkpointDir`)
+  *    to truncate lineage — O(log n) iterations otherwise explode the
   *    plan;
-  *  - convergence is decided from a (count, xor-hash) fingerprint
-  *    OBSERVED on the checkpoint materialization itself
-  *    (Dataset.observe + Observation) — zero extra actions or scans
-  *    per iteration.
+  *  - convergence is decided from a (rows, xor-hash) fingerprint
+  *    observed on that materialization job itself — zero extra actions
+  *    or scans per iteration.
   */
 object ConnectedComponents {
 
@@ -135,15 +134,7 @@ object ConnectedComponents {
       edges: DataFrame,
       maxIterations: Int = 50,
       checkpointDir: Option[String] = None,
-      localFinishEdges: Long = 100000L,
-      /** Eagerly materialize the assignments result (default). Callers
-        * that consume the result exactly ONCE (the dedup-groups member
-        * labeling) pass false and skip one driver-serial job — the
-        * lazy union+distinct then runs inside the consumer's own
-        * materialization, reading the already-checkpointed (and, with
-        * `checkpointDir`, durable) fixpoint frame.
-        */
-      materializeAssignments: Boolean = true): (DataFrame, Stats) = {
+      localFinishEdges: Long = 100000L): (DataFrame, Stats) = {
 
     // Per-iteration materialization MUST truncate the logical plan
     // (localCheckpoint / parquet snapshot), not merely persist: each
@@ -151,32 +142,13 @@ object ConnectedComponents {
     // two unions), so un-truncated plans grow 16^k and AQE's
     // plan-description stringification alone takes minutes by
     // iteration 4.
-    /** Materialize + fingerprint in ONE pass: the (count, xor-hash)
-      * convergence fingerprint rides the checkpoint job as an observed
-      * metric instead of a second scan.
+    /** Materialize + fingerprint in ONE pass: the (rows, xor-hash)
+      * convergence fingerprint rides the materialization job.
       */
     def checkpoint(df: DataFrame, iter: Int): (DataFrame, (Long, Long)) = {
-      // UUID suffix: Observation matches metrics BY NAME across the
-      // session — concurrent runs (parallel test suites) must not
-      // cross-wire each other's convergence fingerprints
-      val obs = org.apache.spark.sql.Observation(
-        s"cc_fp_${iter}_${java.util.UUID.randomUUID}")
-      val observed = df.observe(obs,
-        count(lit(1)).as("n"),
-        coalesce(bit_xor(xxhash64(col("src"), col("dst"))), lit(0L)).as("h"))
-      spark.sparkContext.setJobDescription(s"graft:cc_iter_$iter")
-      val out = try {
-        checkpointDir match {
-          case Some(dir) =>
-            val path = s"$dir/cc_iter_$iter"
-            observed.write.mode("overwrite").parquet(path)
-            spark.read.parquet(path)
-          case None =>
-            observed.localCheckpoint(true)
-        }
-      } finally spark.sparkContext.setJobDescription(null)
-      val row = obs.get
-      (out, (row("n").asInstanceOf[Long], row("h").asInstanceOf[Long]))
+      val (out, m) = Materialize(df, s"cc_iter_$iter", checkpointDir,
+        "h" -> coalesce(bit_xor(xxhash64(col("src"), col("dst"))), lit(0L)))
+      (out, (m("rows"), m("h")))
     }
 
     // The iteration-0 materialization executes the CALLER's entire
@@ -284,29 +256,13 @@ object ConnectedComponents {
     }
     val (e, iter, edgeCounts) = loop
 
-    // At the fixpoint every edge is (node → component-min).
+    // At the fixpoint every edge is (node → component-min). LAZY: a
+    // single consumer (the dedup closure's member labeling) runs the
+    // union+distinct inside its own materialization; `assign`, which
+    // reads it twice, materializes it.
     val roots = e.select(col("dst").as("doc_id"), col("dst").as("entity_id")).distinct()
-    // materialized: every caller fans this out (assign's singleton
-    // anti-join + the union, the dedup closure's member labeling) and
-    // a lazy result re-runs BOTH distincts per consumer — observed as
-    // 4+ extra doc_id shuffles in the dd_dedup_groups plan. Narrow
-    // 2-column frame, one extra job, re-scans free after it. Durable
-    // (parquet, same convention as the iteration snapshots) when a
-    // checkpointDir is configured — an executor loss after the loop
-    // must not kill the labeling joins (r6, VERDICT ask).
-    val assignFrame = e.select(col("src").as("doc_id"), col("dst").as("entity_id"))
-      .unionAll(roots)
-      .distinct()
-    val assignments =
-      if (!materializeAssignments) assignFrame
-      else checkpointDir match {
-        case Some(dir) =>
-          val path = s"$dir/cc_assignments"
-          assignFrame.write.mode("overwrite").parquet(path)
-          spark.read.parquet(path)
-        case None => assignFrame.localCheckpoint(true)
-      }
-    (assignments, Stats(iter, edgeCounts.toSeq))
+    (e.select(col("src").as("doc_id"), col("dst").as("entity_id")).unionAll(roots).distinct(),
+      Stats(iter, edgeCounts.toSeq))
   }
 
   /** Full assignment over a doc universe: CC over match edges +
@@ -318,9 +274,12 @@ object ConnectedComponents {
       resolvedEdges: DataFrame, // (doc_a, doc_b)
       checkpointDir: Option[String] = None,
       localFinishEdges: Long = 100000L): (DataFrame, Stats) = {
-    val (members, stats) = run(spark,
+    val (fixpoint, stats) = run(spark,
       resolvedEdges.select(col("doc_a").as("src"), col("doc_b").as("dst")),
       checkpointDir = checkpointDir, localFinishEdges = localFinishEdges)
+    // materialized: read twice (the singleton anti-join and the union);
+    // lazy, each read re-runs both distincts of the labeling
+    val (members, _) = Materialize(fixpoint, "cc_assignments", checkpointDir)
     val singletons = docIds
       .join(members, Seq("doc_id"), "left_anti")
       .select(col("doc_id"), col("doc_id").as("entity_id"))

@@ -6,6 +6,7 @@ import graft.cluster.ConnectedComponents
 import graft.io.SnapshotStore
 import graft.normalize.Normalize
 import graft.score.{Ambiguity, Generic, Scoring}
+import graft.util.Materialize
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -31,6 +32,13 @@ object ResolveJob {
       blocking: Blocking.Config = Blocking.Config(),
       weights: Scoring.Weights = Scoring.Weights(),
       generic: Generic.Config = Generic.Config(),
+      /** Tier for every eager cut — stage outputs and the
+        * materializations inside blocking, CC and assembly, all through
+        * graft.util.Materialize: durable parquet under this dir when
+        * set, in-memory localCheckpoint otherwise. With `snapshotRoot`
+        * set, stage outputs stay in memory: the snapshot commit is
+        * their durable copy.
+        */
       checkpointDir: Option[String] = None,
       numberEntities: Boolean = true,
       /** Force the scoring join strategy: Some(true) broadcasts the
@@ -43,8 +51,7 @@ object ResolveJob {
       /** When set, every stage output is committed as an atomic
         * snapshot (Iceberg semantics, graft.io.SnapshotStore) together
         * with per-partition lineage rows, and `run` RESUMES from the
-        * last committed stage in that store. When unset, stages are
-        * localCheckpoint'd (fast, in-memory).
+        * last committed stage in that store.
         */
       snapshotRoot: Option[String] = None)
 
@@ -84,35 +91,26 @@ object ResolveJob {
       try body finally stageMs += name -> ((System.nanoTime() - t0) / 1000000)
     }
 
-    /** Materialize a stage: resume from the store when a committed
-      * snapshot exists; otherwise compute, commit (with per-partition
-      * lineage), or localCheckpoint when no store is configured. Row
-      * counts — plus any caller-supplied extra aggregates — ride the
-      * materialization job as OBSERVED metrics (Dataset.observe), so
-      * the job's counters cost no extra actions.
+    /** Materialize a stage through graft.util.Materialize, its row
+      * count and `extras` observed on the same job: resume from the
+      * store when a committed snapshot exists; otherwise compute and,
+      * with a store, commit it with per-partition lineage rows.
       */
     def stage(name: String, extras: (String, org.apache.spark.sql.Column)*)
         (build: => DataFrame): DataFrame = timed(name) {
-      // UUID suffix: concurrent runs must not cross-match metrics by name
-      val obs = org.apache.spark.sql.Observation(
-        s"stage_${name}_${java.util.UUID.randomUUID}")
-      def observedCheckpoint(df: DataFrame): DataFrame = {
-        val aggs = count(lit(1)).as("rows") +: extras.map { case (k, c) => c.as(k) }
-        spark.sparkContext.setJobDescription(s"graft:$name")
-        val out = try df.observe(obs, aggs.head, aggs.tail: _*).localCheckpoint(true)
-        finally spark.sparkContext.setJobDescription(null)
-        val row = obs.get
-        stageRows(name) = row("rows").asInstanceOf[Long]
-        extras.foreach { case (k, _) =>
-          stageRows(s"$name.$k") = row(k).asInstanceOf[Long] }
+      def materialize(df: DataFrame): DataFrame = {
+        val (out, m) = Materialize(df, name,
+          if (store.isDefined) None else cfg.checkpointDir, extras: _*)
+        stageRows(name) = m("rows")
+        extras.foreach { case (k, _) => stageRows(s"$name.$k") = m(k) }
         out
       }
       store match {
         case Some(st) if st.exists(name) =>
           resumed += name
-          observedCheckpoint(st.read(spark, name))
+          materialize(st.read(spark, name))
         case Some(st) =>
-          val df = observedCheckpoint(build)
+          val df = materialize(build)
           st.commit(df, name)
           val lineage = df
             .groupBy(spark_partition_id().as("partition_id"))
@@ -120,7 +118,7 @@ object ResolveJob {
             .withColumn("stage", lit(name))
           st.commit(lineage, s"_lineage_$name")
           df
-        case None => observedCheckpoint(build)
+        case None => materialize(build)
       }
     }
 
@@ -202,7 +200,7 @@ object ResolveJob {
       assignments
     }
 
-    // the two intra-assembly localCheckpoints run eagerly here; the
+    // the two intra-assembly materializations run eagerly here; the
     // final report query stays lazy (timed by the caller's action).
     // ambiguousDocs is passed ONLY when suppression actually fired
     // (r6): a Some(empty-frame) forced Assemble's entries union +

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.functions.GraftFunctions
+import graft.util.Materialize
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -29,40 +30,15 @@ object Dedup {
     * ~megaCap²/2 per key). Down-sampling is hash-mod on the id —
     * deterministic across runs and parallelism levels.
     *
-    * `checkpointDir`: when set, the tier frames are materialized as
-    * parquet snapshots under it instead of `localCheckpoint` —
+    * `checkpointDir`: the tier frames are materialized through
+    * graft.util.Materialize — its durable parquet tier under this dir
+    * when set, its in-memory localCheckpoint tier otherwise.
     * localCheckpoint blocks live in non-replicated executor storage,
     * so on a real cluster a lost executor kills a long dedup job;
-    * store-backed tiers survive (mirrors ConnectedComponents'
-    * `checkpointDir`). Same outputs either way (OpsSpec-pinned).
+    * durable tiers survive. Same outputs either way (OpsSpec-pinned).
     */
   final case class BlockBounds(maxBlockSize: Int = 64, megaCap: Int = 4096,
       salts: Int = 8, checkpointDir: Option[String] = None)
-
-  /** Materialize a tier frame: durable parquet snapshot when a
-    * checkpoint dir is configured, localCheckpoint otherwise.
-    *
-    * Snapshot paths live under `<dir>/<applicationId>/` (the same
-    * convention as SparkContext.setCheckpointDir's per-app subdir):
-    * two applications pointed at one checkpointDir — e.g. a streaming
-    * job and a batch job sharing config — must never clobber each
-    * other's live tier snapshots mid-query, which a bare
-    * session-monotonic counter with mode(overwrite) would do (both
-    * apps start at bsj_*_0). WITHIN an app the counter keeps the store
-    * bounded; ACROSS app restarts the per-app subdir is garbage like
-    * any Spark checkpoint dir — reaping dead-app subdirs is the
-    * operator's standard checkpoint-hygiene job.
-    */
-  private val tierSeq = new java.util.concurrent.atomic.AtomicLong(0)
-  private[graft] def materializeTier(df: DataFrame, dir: Option[String], tag: String): DataFrame =
-    dir match {
-      case Some(d) =>
-        val appId = df.sparkSession.sparkContext.applicationId
-        val path = s"$d/$appId/bsj_${tag}_${tierSeq.getAndIncrement}"
-        df.write.mode("overwrite").parquet(path)
-        df.sparkSession.read.parquet(path)
-      case None => df.localCheckpoint(true)
-    }
 
   /** Self-join `keyed` on `keyCols`, emitting distinct id pairs
     * (a < b) with the three-tier bounded-block discipline (object
@@ -82,10 +58,10 @@ object Dedup {
     // this frame ~5× (hot aggregate, cold l/r, hot l/r), and callers
     // pass expensive upstreams (minhash kernels, prefix sorts) that
     // must not be recomputed per scan.
-    val k = materializeTier(keyed
+    val (k, _) = Materialize(keyed
       .filter(keyCols.map(col(_).isNotNull).reduce(_ && _))
       .select(struct(keyCols.map(col): _*).as("_k"), col(idCol).as("_id")),
-      bounds.checkpointDir, "keyed")
+      "bsj_keyed", bounds.checkpointDir)
 
     // Hot-key head. Materialized eagerly so the mega down-sampling
     // decision can be surfaced (never silent) and the frame is built
@@ -94,28 +70,23 @@ object Dedup {
     // tokens over a common-vocabulary corpus it can be large — both
     // sides are checkpointed, so AQE picks the join strategy from
     // exact sizes (broadcast when small, shuffle join when not).
-    // the mega-block tally rides the checkpoint materialization as an
-    // observed metric (one job, not a checkpoint job + a second
-    // aggregate action) — this function runs once per candidate family
-    // and per-invocation driver-serial jobs are the scaling tax the
-    // one-box efficiency measurements keep naming. UUID suffix: the
-    // Observation registry matches by name session-wide.
-    val megaObs = org.apache.spark.sql.Observation(
-      s"bsj_mega_${java.util.UUID.randomUUID}")
-    val hot0 = materializeTier(
+    // the mega-block tally rides the materialization as metrics (one
+    // job, not a materialization job + a second aggregate action) —
+    // this function runs once per candidate family and per-invocation
+    // driver-serial jobs are the scaling tax the one-box efficiency
+    // measurements keep naming.
+    val (hot0, mega) = Materialize(
       k.groupBy("_k").count().filter(col("count") > bounds.maxBlockSize)
         .withColumn("keep_mod",
           when(col("count") > bounds.megaCap,
             ceil(col("count").cast("double") / bounds.megaCap).cast("long")))
-        .select("_k", "keep_mod", "count")
-        .observe(megaObs,
-          count(when(col("keep_mod").isNotNull, 1)).as("n"),
-          coalesce(sum(when(col("keep_mod").isNotNull, col("count"))), lit(0L)).as("members")),
-      bounds.checkpointDir, "hot")
-    val megaN = megaObs.get("n").asInstanceOf[Long]
-    if (megaN > 0)
-      log.warn(s"boundedSelfJoinPairs: $megaN mega block(s) " +
-        s"totalling ${megaObs.get("members")} members down-sampled to ~${bounds.megaCap} " +
+        .select("_k", "keep_mod", "count"),
+      "bsj_hot", bounds.checkpointDir,
+      "mega_blocks" -> count(when(col("keep_mod").isNotNull, 1)),
+      "mega_members" -> coalesce(sum(when(col("keep_mod").isNotNull, col("count"))), lit(0L)))
+    if (mega("mega_blocks") > 0)
+      log.warn(s"boundedSelfJoinPairs: ${mega("mega_blocks")} mega block(s) " +
+        s"totalling ${mega("mega_members")} members down-sampled to ~${bounds.megaCap} " +
         "members each (deterministic hash-mod)")
     val hot = hot0.select("_k", "keep_mod")
 
@@ -183,6 +154,13 @@ object Dedup {
     * `when`, because `sequence(a, b)` auto-steps DOWNWARD when b < a
     * (round 1 fed the resulting 0 index into `slice`, which Spark
     * rejects at runtime for any short doc).
+    *
+    * PRECONDITION the output must keep: no duplicate elements (the
+    * `array_distinct`). Three verify paths compute Jaccard as
+    * |A∩B| / (|A|+|B|−|A∩B|), which equals |A∩B| / |A∪B| only for
+    * duplicate-free arrays: [[ngramJaccard]] / [[nearDupGroups]] (via
+    * `ngramRepPairs`), [[minhashNearDupPairs]] and
+    * [[minhashNearDupPairsPortable]]. OpsSpec pins it for n = 1 and 2.
     */
   def wordShingles(text: Column, n: Int): Column = {
     val toks = filter(split(trim(text), "\\s+"), t => t =!= "")
@@ -298,18 +276,18 @@ object Dedup {
     // withSets).
     val wg = org.apache.spark.sql.expressions.Window
       .partitionBy("lang", "len_bucket", "sig")
-    val docToRep = materializeTier(all.filter(size(col("shingles")) > 0)
+    val (docToRep, _) = Materialize(all.filter(size(col("shingles")) > 0)
       .select(col("doc_id"), col("lang"), col("len_bucket"),
         md5(concat_ws("\n", array_sort(col("shingles")))).as("sig"))
       .select(col("doc_id"),
         min("doc_id").over(wg).as("rep_id"),
         count(lit(1)).over(wg).as("grp_n")),
-      checkpointDir, "ngram_doc2rep")
+      "ngram_doc2rep", checkpointDir)
     // reps are exactly the rows that are their own group min
-    val withSets = materializeTier(all.join(
+    val (withSets, _) = Materialize(all.join(
       docToRep.filter(col("doc_id") === col("rep_id")).select("doc_id"),
       Seq("doc_id"), "left_semi"),
-      checkpointDir, "ngram_repsets")
+      "ngram_repsets", checkpointDir)
 
     val toks = withSets.select(col("doc_id"), col("lang"), col("len_bucket"),
       size(col("shingles")).as("sz"), explode(col("shingles")).as("t"))
@@ -533,9 +511,9 @@ object Dedup {
     require(16 % slices == 0,
       s"maxHamming $maxHamming: slices ($slices) must divide the 16 hex nibbles")
     val w = 16 / slices // hex chars per slice
-    val fp = materializeTier( // read by banding AND twice by the verify join
+    val (fp, _) = Materialize( // read by banding AND twice by the verify join
       simhashVerify(docs).filter(col("simhash_hex").isNotNull),
-      bounds.checkpointDir, "shv_fp")
+      "shv_fp", bounds.checkpointDir)
     val sliceExprs = (0 until slices).map(i =>
       concat(lit(s"$i:"), substring(col("simhash_hex"), i * w + 1, w)))
     val sliced = fp.select(col("doc_id"), explode(array(sliceExprs: _*)).as("slice"))
@@ -578,7 +556,7 @@ object Dedup {
     // the hamming verify — lazy, the simhash64 kernel re-scanned the
     // full corpus text three times per run
     simhashPairsFromFingerprints(
-      materializeTier(simhash(docs), bounds.checkpointDir, "simhash_fp"),
+      Materialize(simhash(docs), "simhash_fp", bounds.checkpointDir)._1,
       maxHamming, bounds)
 
   /** Slice-and-verify over a precomputed `(doc_id, simhash)` frame —
@@ -681,10 +659,11 @@ object Dedup {
       n: Int = 1,
       threshold: Double = 0.6,
       lengthBucket: Int = 100,
-      /** Durable parquet snapshots for every eager materialization in
-        * this composition (rep map, rep sets, tier frames, CC
-        * iterations + assignments, group labels) — executor-loss
-        * survival on a real cluster; localCheckpoint otherwise.
+      /** Tier of every eager materialization in this composition (rep
+        * map, rep sets, tier frames, CC iterations, group labels), all
+        * through graft.util.Materialize: durable parquet snapshots
+        * (executor-loss survival on a real cluster) when set,
+        * localCheckpoint otherwise.
         */
       checkpointDir: Option[String] = None): (DataFrame, graft.cluster.ConnectedComponents.Stats) = {
     // CC labels are lexicographic-min STRINGS (collision-free at any
@@ -708,12 +687,11 @@ object Dedup {
     val r = ngramRepPairs(docs, n, threshold, lengthBucket, checkpointDir)
     val repEdges = r.repPairs
       .select(pad(col("rep_a")).as("src"), pad(col("rep_b")).as("dst"))
-    // single consumer (the labeled join below) → skip the eager
-    // assignments job; the union+distinct runs inside g's own
-    // materialization off the durable/checkpointed fixpoint frame
+    // single consumer (the labeled join below): CC's lazy fixpoint
+    // labeling runs inside g's own materialization off the
+    // materialized (in-memory or durable) last iteration
     val (repAssign, ccStats) =
-      graft.cluster.ConnectedComponents.run(spark, repEdges,
-        checkpointDir = checkpointDir, materializeAssignments = false)
+      graft.cluster.ConnectedComponents.run(spark, repEdges, checkpointDir = checkpointDir)
     // member label = its rep's component min (reps without any rep-level
     // edge keep themselves — rep IS the group min); docs with empty
     // shingle sets never entered docToRep and stay singletons.
@@ -733,10 +711,10 @@ object Dedup {
     val singletons = docs.select(col("doc_id"))
       .join(r.docToRep.select("doc_id"), Seq("doc_id"), "left_anti")
       .select(col("doc_id"), pad(col("doc_id")).as("glabel"))
-    val g = materializeTier(labeled.unionByName(singletons)
+    val (g, _) = Materialize(labeled.unionByName(singletons)
       .select(col("doc_id").cast("long").as("doc_id"),
         col("glabel").cast("long").as("group_id")),
-      checkpointDir, "ngram_groups")
+      "ngram_groups", checkpointDir)
     val sizes = g.groupBy("group_id").agg(count(lit(1)).as("group_size"))
     (g.join(sizes, "group_id")
       .select(col("doc_id"), col("group_id"), col("group_size"),

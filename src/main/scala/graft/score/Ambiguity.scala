@@ -66,17 +66,13 @@ object Ambiguity {
       when(col(s"fu.$c").isNotNull && col(s"fv.$c").isNotNull &&
         col(s"fu.$c") =!= col(s"fv.$c"), c.toUpperCase): org.apache.spark.sql.Column)
       .reduce(coalesce(_, _))
-    // fired-triple count rides each materialization as an observed
-    // metric — the fixpoint below costs ONE job per round, and the
-    // (common) zero-conflict corpus exits after the first job with the
-    // edge frame untouched.
-    def observedCheckpoint(df: DataFrame): (DataFrame, Long) = {
-      val obs = org.apache.spark.sql.Observation(
-        s"amb_fired_${java.util.UUID.randomUUID}")
-      val out = graft.util.Confs.withJobDesc(df.sparkSession)("ambiguity") {
-        df.observe(obs, count(lit(1)).as("n")).localCheckpoint(true)
-      }
-      (out, obs.get("n").asInstanceOf[Long])
+    // fired-triple count is the materialization's observed row count —
+    // the fixpoint below costs ONE job per round, and the (common)
+    // zero-conflict corpus exits after the first job with the edge
+    // frame untouched.
+    def materialize(df: DataFrame): (DataFrame, Long) = {
+      val (out, m) = graft.util.Materialize(df, "ambiguity", None)
+      (out, m("rows"))
     }
     // AQE scoped OFF for the fixpoint actions: joins key on doc ids
     // with blocking-capped degree (skew-free by construction), and AQE
@@ -84,7 +80,7 @@ object Ambiguity {
     // round — pure driver-serial latency, identical at any cluster size
     def ambConfs[T](body: => T): T = graft.util.Confs.withConfs(
       edges.sparkSession)("spark.sql.adaptive.enabled" -> "false")(body)
-    val (fired0, nFired0) = ambConfs { observedCheckpoint(tri
+    val (fired0, nFired0) = ambConfs { materialize(tri
       .join(ids.as("fu"), col("u") === col("fu.doc_id"))
       .join(ids.as("fv"), col("v") === col("fv.doc_id"))
       .filter(conflictExpr)
@@ -117,7 +113,7 @@ object Ambiguity {
       prev = nFired
       val amb = fired.select(col("d").as("v")).distinct()
         .withColumn("_vamb", lit(true))
-      val (next, n) = ambConfs { observedCheckpoint(fired0.join(amb, Seq("v"), "left")
+      val (next, n) = ambConfs { materialize(fired0.join(amb, Seq("v"), "left")
         .filter(!(coalesce(col("_vamb"), lit(false)) && col("v") < col("d")))
         .drop("_vamb")) }
       fired = next

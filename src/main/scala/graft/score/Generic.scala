@@ -89,14 +89,10 @@ object Generic {
         case _       => cfg.threshold
       })
     }.toMap)
-    val obs = org.apache.spark.sql.Observation(
-      s"generic_hot_${java.util.UUID.randomUUID}")
-    val hot = exploded.groupBy("fam", "v").count()
+    val (hot, m) = graft.util.Materialize(exploded.groupBy("fam", "v").count()
       .filter(col("count") >= element_at(thresholdOf, col("fam")))
-      .select("fam", "v")
-      .observe(obs, count(lit(1)).as("n"))
-      .localCheckpoint(true)
-    (hot, obs.get("n").asInstanceOf[Long])
+      .select("fam", "v"), "generic_hot", None)
+    (hot, m("rows"))
   }
 
   /** Augment the feature table with boolean `*_generic` flags: one

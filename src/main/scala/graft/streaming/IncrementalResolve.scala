@@ -6,6 +6,7 @@ import graft.io.{SnapshotDiff, SnapshotStore}
 import graft.jobs.ResolveJob
 import graft.normalize.Normalize
 import graft.score.Generic
+import graft.util.Materialize
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -82,19 +83,17 @@ object IncrementalResolve {
       processBatchInner(spark, store, batch, cfg)
     }
 
-  /** Materialize with an observed row count riding the same job. */
-  private def observedCount(df: DataFrame): (DataFrame, Long) = {
-    val obs = org.apache.spark.sql.Observation(
-      s"inc_${java.util.UUID.randomUUID}")
-    val out = df.observe(obs, count(lit(1)).as("n")).localCheckpoint(true)
-    (out, obs.get("n").asInstanceOf[Long])
-  }
-
   private def processBatchInner(
       spark: SparkSession,
       store: SnapshotStore,
       batch: DataFrame,
       cfg: ResolveJob.Config): BatchResult = {
+    // every eager cut: Materialize's durable tier under
+    // cfg.checkpointDir when set, in-memory otherwise
+    def materialize(df: DataFrame, name: String): (DataFrame, Long) = {
+      val (out, m) = Materialize(df, s"inc_$name", cfg.checkpointDir)
+      (out, m("rows"))
+    }
 
     // At-least-once redelivery vs genuine UPSERT: the reference's
     // add_record replaces an existing record (consumer.py:188 delegates
@@ -110,13 +109,13 @@ object IncrementalResolve {
       val incoming = contentHash(newDocs0).join(
         contentHash(prev).select(col("doc_id"), col("_h").as("_h_prev")),
         Seq("doc_id"), "left")
-      val (t, n) = observedCount(incoming
+      val (t, n) = materialize(incoming
         .filter(col("_h_prev").isNull || col("_h") =!= col("_h_prev"))
-        .select("doc_id", "spans"))
+        .select("doc_id", "spans"), "touched")
       val kept = prev.join(t.select("doc_id"), Seq("doc_id"), "left_anti")
       (kept.unionByName(t), t, n)
     } else {
-      val (t, n) = observedCount(newDocs0)
+      val (t, n) = materialize(newDocs0, "touched")
       (t, t, n)
     }
     // NOTE: the docs snapshot is committed LAST (end of this method).
@@ -127,23 +126,25 @@ object IncrementalResolve {
     // snapshot.anti-join(touched) + recomputed rows). Committing docs
     // first would turn the redelivered batch into a content-hash no-op
     // and silently drop it from features/edges/assignments.
-    val docsSnap = allDocs.localCheckpoint(true)
-    val touchedIds = touched.select("doc_id").localCheckpoint(true)
+    // docs and touchedIds stay LAZY: with no prior docs snapshot
+    // `allDocs` IS the materialized `touched`; with one, its only reader
+    // is that final commit. touchedIds is a projection of the
+    // materialized `touched`.
+    val touchedIds = touched.select("doc_id")
 
     // normalize ONLY the touched docs (the per-row CPU-heavy stage);
     // untouched docs' features come from the persisted snapshot
-    val featsNew = Normalize.features(touched).localCheckpoint(true)
+    val (featsNew, _) = materialize(Normalize.features(touched), "features_new")
     val featsRaw = if (store.exists("features_raw")) {
       store.read(spark, "features_raw")
         .join(touchedIds, Seq("doc_id"), "left_anti")
         .unionByName(featsNew)
     } else featsNew
-    val featsRawSnap = featsRaw.localCheckpoint(true)
+    val (featsRawSnap, _) = materialize(featsRaw, "features_raw")
     store.commit(featsRawSnap, "features_raw")
     // generic flags: corpus-wide hot-value thresholds — one aggregate
     // scan of the feature snapshot + per-family joins (no per-row CPU)
-    val feats = Generic.withGenericFlags(featsRawSnap, cfg.generic)
-      .localCheckpoint(true)
+    val (feats, _) = materialize(Generic.withGenericFlags(featsRawSnap, cfg.generic), "features")
 
     // blocking keys ONLY for touched docs, merged into the persisted
     // key table; mega-key capping needs corpus-wide block sizes — one
@@ -154,11 +155,12 @@ object IncrementalResolve {
         .join(touchedIds, Seq("doc_id"), "left_anti")
         .unionByName(keysNew)
     } else keysNew
-    val blocksSnap = blocksMerged.localCheckpoint(true)
+    val (blocksSnap, _) = materialize(blocksMerged, "blocks")
     store.commit(blocksSnap, "blocks")
 
     // candidate pairs restricted to those touching a new/changed doc;
-    // mega-hot keys are down-sampled (never dropped) on the ALL side
+    // mega-hot keys are down-sampled (never dropped) on the ALL side.
+    // LAZY: scoring is their only reader
     val blocksAll = Blocking.cappedBlocks(blocksSnap, cfg.blocking)
     val blocksNew = blocksAll.join(touchedIds, "doc_id")
     val l = blocksAll.select(col("bkey"), col("doc_id").as("doc_a"))
@@ -169,12 +171,10 @@ object IncrementalResolve {
         least(col("doc_a"), col("doc_b")).as("doc_a"),
         greatest(col("doc_a"), col("doc_b")).as("doc_b"))
       .distinct()
-      .localCheckpoint(true)
 
-    val newEdges = graft.util.Confs.withConfs(spark)(
+    val (newEdges, _) = graft.util.Confs.withConfs(spark)(
       "spark.sql.codegen.wholeStage" -> "false") {
-      graft.score.Scoring.scorePairs(touchingPairs, feats, cfg.weights)
-        .localCheckpoint(true)
+      materialize(graft.score.Scoring.scorePairs(touchingPairs, feats, cfg.weights), "new_edges")
     }
 
     val edges = if (store.exists("edges")) {
@@ -189,17 +189,16 @@ object IncrementalResolve {
         .join(touchedIds.withColumnRenamed("doc_id", "doc_b"), Seq("doc_b"), "left_anti")
       prev.unionByName(newEdges)
     } else newEdges
-    val edgesSnap = edges.localCheckpoint(true)
+    val (edgesSnap, _) = materialize(edges, "edges")
     store.commit(edgesSnap, "edges") // RAW scores; ambiguity re-derives
     // per batch from the full merged edge set (a new doc can create or
     // dissolve a conflict, and cascades cross POSSIBLY_SAME bridges),
     // matching the batch job's semantics; cost is bounded by the sparse
     // strong-edge set, not the corpus
     val suppressed = graft.score.Ambiguity.suppress(edgesSnap, feats)
-    val currResolved = suppressed.edges
+    val (currResolved, _) = materialize(suppressed.edges
       .filter(col("level") === "RESOLVED")
-      .select("doc_a", "doc_b")
-      .localCheckpoint(true)
+      .select("doc_a", "doc_b"), "resolved")
 
     // connected components over ONLY the affected subgraph: components
     // (by previous labels) containing any endpoint of an added/removed
@@ -222,15 +221,15 @@ object IncrementalResolve {
           .unionByName(changed.select(col("doc_b").as("doc_id")))
           .unionByName(touchedIds)
           .distinct()
-        val affLabels = prevAssign.join(touchedVerts, Seq("doc_id"))
-          .select("entity_id").distinct().localCheckpoint(true)
+        val (affLabels, _) = materialize(prevAssign.join(touchedVerts, Seq("doc_id"))
+          .select("entity_id").distinct(), "affected_labels")
         val freshDocs = touchedIds
           .join(prevAssign.select("doc_id"), Seq("doc_id"), "left_anti")
-        val (affDocs, nAff) = observedCount(
+        val (affDocs, nAff) = materialize(
           prevAssign.join(affLabels, Seq("entity_id"), "left_semi")
             .select("doc_id")
             .unionByName(freshDocs)
-            .distinct())
+            .distinct(), "affected_docs")
         // an unchanged edge has both endpoints in the same previous
         // component; a changed edge's endpoints are both in touchedVerts
         // — so a doc_a-side semi-join keeps every affected-subgraph edge
@@ -243,12 +242,12 @@ object IncrementalResolve {
           .select("doc_id", "entity_id")
         (carried.unionByName(sub.select("doc_id", "entity_id")), nAff)
       case None =>
-        val (allIds, nAll) = observedCount(docsSnap.select("doc_id"))
+        val (allIds, nAll) = materialize(allDocs.select("doc_id"), "doc_ids")
         val (assign, _) = ConnectedComponents.assign(
           spark, allIds, currResolved, cfg.checkpointDir)
         (assign, nAll)
     }
-    val assignSnap = assignments.localCheckpoint(true)
+    val (assignSnap, _) = materialize(assignments, "assignments")
 
     val affected = if (store.exists("assignments")) {
       // read() binds the snapshot PATH eagerly, so this lazy diff stays
@@ -270,7 +269,7 @@ object IncrementalResolve {
     store.commit(assignSnap, "assignments")
     store.commit(currResolved, "resolved")
     // docs commit LAST — the batch-atomicity marker (see note above)
-    store.commit(docsSnap, "docs")
+    store.commit(allDocs, "docs")
 
     BatchResult(assignSnap, affected, nTouched, nTouched, nCcVerts)
   }

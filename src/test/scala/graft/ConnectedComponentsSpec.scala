@@ -99,4 +99,41 @@ class ConnectedComponentsSpec extends AnyFunSuite {
     val oracle = byRoot.flatMap { case (_, ms) => ms.map(_ -> ms.min) }.toMap
     assert(cc(edges) == oracle)
   }
+
+  test("two runs sharing a checkpointDir keep their own durable snapshots") {
+    // run B must not overwrite the snapshots run A's frames still read:
+    // localFinishEdges = 0 keeps every iteration on the durable tier,
+    // and A is collected only after B has finished
+    val dir = java.nio.file.Files.createTempDirectory("cc_shared").toString
+    def oracle(edges: Seq[(String, String)]): Map[String, String] = {
+      val parent = scala.collection.mutable.Map[String, String]()
+      def find(x: String): String = {
+        val p = parent.getOrElseUpdate(x, x)
+        if (p == x) x else { val r = find(p); parent(x) = r; r }
+      }
+      edges.foreach { case (a, b) =>
+        val (ra, rb) = (find(a), find(b))
+        if (ra != rb) parent(math.Ordering[String].max(ra, rb)) = math.Ordering[String].min(ra, rb)
+      }
+      edges.flatMap(e => Seq(e._1, e._2)).distinct.groupBy(find)
+        .flatMap { case (_, ms) => ms.map(_ -> ms.min) }
+    }
+    def collect(df: org.apache.spark.sql.DataFrame): Map[String, String] =
+      df.collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    val a = (0 until 30).map(i => (f"a$i%02d", f"a${i + 1}%02d")) ++ Seq("p" -> "q")
+    val b = (0 until 12).map(i => (f"b$i%02d", f"b${(i * 5) % 12}%02d"))
+      .filter(e => e._1 != e._2)
+    val (runA, _) = ConnectedComponents.run(spark, a.toDF("src", "dst"),
+      checkpointDir = Some(dir), localFinishEdges = 0L)
+    val (assignA, _) = ConnectedComponents.assign(spark,
+      a.flatMap(e => Seq(e._1, e._2)).distinct.toDF("doc_id"), a.toDF("doc_a", "doc_b"),
+      checkpointDir = Some(dir), localFinishEdges = 0L)
+    ConnectedComponents.run(spark, b.toDF("src", "dst"),
+      checkpointDir = Some(dir), localFinishEdges = 0L)._1.collect()
+    ConnectedComponents.assign(spark,
+      b.flatMap(e => Seq(e._1, e._2)).distinct.toDF("doc_id"), b.toDF("doc_a", "doc_b"),
+      checkpointDir = Some(dir), localFinishEdges = 0L)._1.collect()
+    assert(collect(runA) == oracle(a), "run A's lazy labels were clobbered by run B")
+    assert(collect(assignA) == oracle(a), "assign A's labels were clobbered by run B")
+  }
 }

@@ -191,8 +191,8 @@ class FixtureResolveSpec extends AnyFunSuite {
     val tierDirs = java.nio.file.Files.list(appDir).iterator().asScala
       .map(_.getFileName.toString).toSet
     assert(tierDirs.exists(_.contains("asm_docs")), s"no asm_docs snapshot in $tierDirs")
-    assert(java.nio.file.Files.exists(java.nio.file.Paths.get(ckpt, "cc_assignments")),
-      s"no cc_assignments snapshot under $ckpt")
+    assert(tierDirs.exists(_.startsWith("cc_assignments_")),
+      s"no cc_assignments snapshot in $tierDirs")
   }
 
   test("durable path: nearDupGroups with checkpointDir is byte-identical to default") {
@@ -223,7 +223,8 @@ class FixtureResolveSpec extends AnyFunSuite {
     // cc_assignments snapshot is written here — the fixpoint frames
     // (cc_iter_*) are durable and the labeling recomputes from them;
     // the ResolveJob durable test above covers the materialized case
-    assert(java.nio.file.Files.exists(java.nio.file.Paths.get(ckpt, "cc_iter_0")))
+    assert(dirs.exists(_.startsWith("cc_iter_0_")), s"no cc_iter_0 snapshot in $dirs")
+    assert(!dirs.exists(_.startsWith("cc_assignments")), s"unexpected assignments snapshot in $dirs")
   }
 
   test("resume: committed snapshots re-read byte-identically") {

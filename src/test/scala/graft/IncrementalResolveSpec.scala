@@ -227,4 +227,24 @@ class IncrementalResolveSpec extends AnyFunSuite {
       DocCorpus.fromFlatJsonl(spark, FixtureEval.CustomersPath).toDF())
     assert(assignMap(finalAssign) == assignMap(batchRun.assignments))
   }
+
+  test("three synthetic batches == one batch resolve, on the durable and the in-memory tier") {
+    // in-repo corpus (no reference fixture): ~300 entities, split into
+    // three batches by a seeded hash of doc_id
+    import org.apache.spark.sql.functions._
+    val corpus = DocCorpus.synthetic(spark, 300L, 5L).toDF().localCheckpoint(true)
+    val batches = (0 until 3).map(b =>
+      corpus.filter(pmod(xxhash64(col("doc_id"), lit(5L)), lit(3L)) === b).localCheckpoint(true))
+    val expected = assignMap(ResolveJob.run(spark, corpus).assignments)
+    val durable = ResolveJob.Config(
+      checkpointDir = Some(java.nio.file.Files.createTempDirectory("resckpt").toString))
+    assert(assignMap(ResolveJob.run(spark, corpus, durable).assignments) == expected,
+      "durable-tier batch resolve differs from the in-memory one")
+    for (ckpt <- Seq(Some(java.nio.file.Files.createTempDirectory("incckpt").toString), None)) {
+      val store = new SnapshotStore(java.nio.file.Files.createTempDirectory("incsyn").toString)
+      val cfg = ResolveJob.Config(checkpointDir = ckpt)
+      val last = batches.map(b => IncrementalResolve.processBatch(spark, store, b, cfg)).last
+      assert(assignMap(last.assignments) == expected, s"checkpointDir = $ckpt")
+    }
+  }
 }

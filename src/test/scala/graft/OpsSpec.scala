@@ -490,4 +490,29 @@ class OpsSpec extends AnyFunSuite {
     // md5("hello world")
     assert(fp.getString(1) == "5eb63bbbe01eeed093cb22bb8f5acdc3")
   }
+
+  test("wordShingles is duplicate-free (the |A∪B| = |A|+|B|−|A∩B| precondition)") {
+    // repeated tokens AND repeated bigrams: "a b a b a b" has bigrams
+    // {a b, b a} each several times; whitespace runs and a trailing
+    // repeat exercise the tokenizer too
+    val texts = Seq(
+      "a b a b a b",
+      "the cat  the cat the\tcat the",
+      "  x x x x  ",
+      "one",
+      "",
+      "p q r p q r p q")
+    val df = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("id", "text")
+    for (n <- Seq(1, 2)) {
+      val got = df.select(col("id"), Dedup.wordShingles(col("text"), n).as("sh"))
+        .as[(Long, Seq[String])].collect().toMap
+      texts.zipWithIndex.foreach { case (t, i) =>
+        val sh = got(i.toLong)
+        assert(sh.distinct.size == sh.size, s"n=$n: duplicate shingles in $sh for '$t'")
+        val toks = t.trim.split("\\s+").filter(_.nonEmpty).toSeq
+        assert(sh.toSet == toks.sliding(n).filter(_.size == n).map(_.mkString(" ")).toSet,
+          s"n=$n: wrong shingle set $sh for '$t'")
+      }
+    }
+  }
 }

@@ -37,11 +37,7 @@ import org.apache.spark.sql.SparkSession
   *      path/eden and per-core work inflates ~30% (ALU, DRAM-stream
   *      and random-walk microbenches all scale ≥3.96× on this host
   *      while every local[4] pipeline stage sits at ~3×) — separate
-  *      executor JVMs on a real cluster never pay that. The literal
-  *      multi-executor shape (local-cluster: separate executor JVM
-  *      processes, netty shuffle) is also implemented
-  *      (SPARK_GRAFT_SCALE_TOPOLOGY=multi-jvm) and measured in
-  *      BASELINE.md as the shape-check.
+  *      executor JVMs on a real cluster never pay that.
   *    The run uses the sort-merge scoring path (broadcast's shared
   *    hash relation anti-scales past ~8 probe threads, and SMJ is the
   *    only path at 10^12 docs). Each level is preceded by an untimed
@@ -97,55 +93,11 @@ object Bench {
     }
   }
 
-  /** Session for one scaling level. Default topology is single-JVM
-    * `local[N]`; `SPARK_GRAFT_SCALE_TOPOLOGY=multi-jvm` stands up a
-    * real standalone cluster on this box instead —
-    * `local-cluster[N,1,mem]`: N separate single-core executor JVM
-    * processes (own heap, own GC, netty shuffle), driver apart — the
-    * literal shape the north rule names ("spark-submit, N executors").
-    * Both were measured (BASELINE.md): the multi-JVM topology is shape-
-    * faithful but on ONE box N+1 JVMs × (netty event loops, heartbeat,
-    * shuffle-client threads) contend for the same N+1 pinned CPUs that
-    * a real cluster provisions per NODE, so it under-reports both
-    * levels; the single-JVM numbers are the reported protocol, with
-    * the multi-JVM run documented as the shape-check. Either way the
-    * per-executor-JVM contention measured in the single JVM (shared
-    * eden/allocation path: per-core work inflates ~30% at N=4 while
-    * ALU / DRAM-stream / random-walk microbenches all scale ≥3.96×)
-    * does not exist on a real cluster — the one-box ratio is a LOWER
-    * BOUND on real N→4N executor scaling.
-    */
-  private def scaleSession(cpus: Int): SparkSession = {
-    if (!sys.env.get("SPARK_GRAFT_SCALE_TOPOLOGY").contains("multi-jvm"))
-      return session(cpus)
-    val workerMem = sys.env.getOrElse("SPARK_GRAFT_WORKER_MEM_MB", "7168")
-    val classesDir = new java.io.File(
-      getClass.getProtectionDomain.getCodeSource.getLocation.toURI).getAbsolutePath
-    val s = SparkSession.builder()
-      .master(s"local-cluster[$cpus,1,$workerMem]")
-      .appName(s"graft-scale-$cpus")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "16"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.executor.memory", sys.env.getOrElse("SPARK_GRAFT_EXEC_MEM", "6g"))
-      .config("spark.executor.extraClassPath", classesDir)
-      // each executor is a 1-core container: size its GC/JIT/netty
-      // pools for ONE cpu (otherwise every executor JVM sees the whole
-      // pinned set and N executors × ~5 GC threads thrash it)
-      .config("spark.executor.extraJavaOptions",
-        "-XX:ActiveProcessorCount=1 -XX:+UseParallelGC")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
-
   /** Full resolve (normalize → block → score → CC → assemble) over the
     * synthetic corpus; returns (docs, seconds).
     */
   private def timedResolve(cpus: Int, nEntities: Long): (Long, Double, Double) = {
-    val spark = scaleSession(cpus)
+    val spark = session(cpus)
     val cfg = ResolveJob.Config(
       blocking = graft.blocking.Blocking.Config(salts = math.max(4, cpus)),
       numberEntities = false,
@@ -219,12 +171,7 @@ object Bench {
     // identical job config at every level: one spark-submit config,
     // two cluster sizes (overridable for protocol experiments)
     val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "16")
-    // local-cluster's executor launcher needs a SPARK_HOME layout and
-    // an explicit scala version to build the executor command line
-    val lcEnv = Seq("SPARK_HOME" -> sys.env.getOrElse("SPARK_HOME", "/opt/spark"),
-      "SPARK_SCALA_VERSION" -> "2.13")
-    val code = Process(cmd, None,
-      (("SPARK_GRAFT_SHUFFLE" -> shuffle) +: lcEnv): _*).!(ProcessLogger(
+    val code = Process(cmd, None, "SPARK_GRAFT_SHUFFLE" -> shuffle).!(ProcessLogger(
       l => {
         out.append(l).append('\n')
         if (l.startsWith("STAGEMS")) println(l) // surface the per-stage decomposition
@@ -270,10 +217,14 @@ object Bench {
     val results = if (sys.env.contains("SPARK_GRAFT_SKIP_QUERIES")) Seq.empty else {
       val spark = session(cpus)
       val r = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+        // the profile drains the listener bus after the timed interval
         val samples = (1 to queryRuns).map { _ =>
-          val t0 = System.nanoTime()
-          val n = try fn(spark, sfDir).count() catch { case _: Throwable => -1L }
-          ((System.nanoTime() - t0) / 1e9, n)
+          val ((sec, n), prof) = graft.obs.Profile(spark) {
+            val t0 = System.nanoTime()
+            val n = try fn(spark, sfDir).count() catch { case _: Throwable => -1L }
+            ((System.nanoTime() - t0) / 1e9, n)
+          }
+          (sec, n, prof)
         }
         // median over SUCCESSFUL samples only (a failed run's elapsed is
         // time-to-exception, not query time); a failure OR a row count
@@ -285,20 +236,26 @@ object Bench {
           if (ok.size == samples.size && ok.map(_._2).distinct.size == 1) ok.head._2
           else -1L
         val timed = if (ok.nonEmpty) ok else samples
-        val median = timed.map(_._1).sorted.apply(timed.size / 2)
-        name -> (median, rows)
+        val (median, _, prof) = timed.sortBy(_._1).apply(timed.size / 2)
+        name -> (median, rows, prof)
       }
       spark.stop()
       r
     }
 
-    val qs = results.map { case (k, (sec, _)) => "\"" + k + f"""\":$sec%.3f""" }
+    val qs = results.map { case (k, (sec, _, _)) => "\"" + k + f"""\":$sec%.3f""" }
       .mkString("{", ",", "}")
-    val rows = results.map { case (k, (_, n)) => "\"" + k + s"""\":$n""" }
+    val rows = results.map { case (k, (_, n, _)) => "\"" + k + s"""\":$n""" }
+      .mkString("{", ",", "}")
+    // Spark jobs and shuffle bytes written by the median run
+    // (graft.obs.Profile)
+    val jobs = results.map { case (k, (_, _, p)) => "\"" + k + s"""\":${p.jobs}""" }
+      .mkString("{", ",", "}")
+    val shuffle = results.map { case (k, (_, _, p)) => "\"" + k + s"""\":${p.shuffleWriteBytes}""" }
       .mkString("{", ",", "}")
     val total = results.map(_._2._1).sum
     def suiteJson(scaling: String): String =
-      f"""{"metric":"total","value":$total%.2f,"unit":"sec","queries":$qs,"rows":$rows,"sf":"$sfDir","cpus":$cpus$scaling}"""
+      f"""{"metric":"total","value":$total%.2f,"unit":"sec","queries":$qs,"rows":$rows,"jobs":$jobs,"shuffle_bytes":$shuffle,"sf":"$sfDir","cpus":$cpus$scaling}"""
     // FLUSH the query-suite line IMMEDIATELY (round 4's single
     // end-of-run print lost the completed suite when the driver's
     // timeout hit mid-scaling). If scaling completes, the same line is

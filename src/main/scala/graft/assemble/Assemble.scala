@@ -327,8 +327,9 @@ object Assemble {
       // captures the physical plan's outputPartitioning into the
       // LogicalRDD, and AdaptiveSparkPlanExec reports Unknown — with
       // AQE on, the hash(entity_id) layout would be invisible and every
-      // downstream agg would re-shuffle (verified: tools/
-      // CheckpointPartitioning). The joins feeding this frame are
+      // downstream agg would re-shuffle (measured: 1 exchange vs 0,
+      // BASELINE.md round 5, "Assembly exchange elimination"; PlanSpec
+      // pins it). The joins feeding this frame are
       // uniform doc_id-keyed; skipping AQE here costs nothing
       .transform(d => graft.util.Confs.withConfs(d.sparkSession)(
         "spark.sql.adaptive.enabled" -> "false")(
@@ -557,9 +558,9 @@ object Assemble {
     // — but as sort-merge joins each one SORTED its inputs by the
     // 19-char entity key, including the fat collected-RECORDS side
     // (the dominant time in the final query's metrics,
-    // tools/AssembleMetrics). A shuffled-hash join builds the narrow
-    // aggregate side and streams the fat side unsorted; join results
-    // are strategy-invariant.
+    // OPTIMIZATION_r06.md, "Assembly"). A shuffled-hash join builds
+    // the narrow aggregate side and streams the fat side unsorted; join
+    // results are strategy-invariant.
     val base = recordsWithSummary
       .join(entityName.hint("SHUFFLE_HASH"), Seq("entity_id"), "left")
       .join(featMap.hint("SHUFFLE_HASH"), Seq("entity_id"), "left")

@@ -36,11 +36,9 @@ object ConnectedComponents {
   final case class Stats(iterations: Int, perIterationEdges: Seq[Long])
 
   /** large-star: connect every neighbor larger than u to the min of
-    * u's closed neighborhood. Exposed private[graft] so measurement
-    * probes (tools.FuseProbe) exercise THIS implementation, not a
-    * copy that could drift from what the loop actually runs.
+    * u's closed neighborhood.
     */
-  private[graft] def largeStar(e: DataFrame): DataFrame = {
+  private def largeStar(e: DataFrame): DataFrame = {
     val bidir = e.select(col("src").as("u"), col("dst").as("v"))
       .unionAll(e.select(col("dst").as("u"), col("src").as("v")))
     val mins = bidir.groupBy("u")
@@ -55,7 +53,7 @@ object ConnectedComponents {
   /** small-star: point every smaller-or-equal neighbor (and u itself)
     * at the min of u's smaller neighborhood.
     */
-  private[graft] def smallStar(e: DataFrame): DataFrame = {
+  private def smallStar(e: DataFrame): DataFrame = {
     val directed = e.select(
       greatest(col("src"), col("dst")).as("u"),
       least(col("src"), col("dst")).as("v"))
@@ -77,7 +75,9 @@ object ConnectedComponents {
     */
   private def localFinish(spark: SparkSession, e: DataFrame): DataFrame = {
     import spark.implicits._
-    val rows = e.select(col("src"), col("dst")).as[(String, String)].collect()
+    val rows = graft.util.Confs.withJobDesc(spark)("cc_local_finish") {
+      e.select(col("src"), col("dst")).as[(String, String)].collect()
+    }
     val parent = new java.util.HashMap[String, String]()
     val sz = new java.util.HashMap[String, Int]()
     def find(x0: String): String = {
@@ -185,11 +185,12 @@ object ConnectedComponents {
     // bidirected edge frame against its per-node min aggregate — both
     // sides narrow 19-char-string rows — and the shuffled-hash join
     // skips SMJ's two string sorts per join (measured 0.63–1.0 s vs
-    // 1.15–1.26 s per double-step on a 325k-edge clique-heavy frame,
-    // tools/StarWidthProbe). Per-partition build sides are bounded by
-    // the loop width sizing, and the planner still falls back to SMJ
-    // when its size conditions fail. Join results are
-    // strategy-invariant, so labels are unchanged.
+    // 1.15–1.26 s per double-step on a 325k-edge clique-heavy frame;
+    // OPTIMIZATION_r06.md, "dd_ngram_jaccard / dd_dedup_groups", item
+    // 5). Per-partition build sides are bounded by the loop width
+    // sizing, and the planner still falls back to SMJ when its size
+    // conditions fail. Join results are strategy-invariant, so labels
+    // are unchanged.
     val loop = graft.util.Confs.withConfs(spark)(
       "spark.sql.adaptive.enabled" -> "false",
       "spark.sql.constraintPropagation.enabled" -> "false",
@@ -233,7 +234,7 @@ object ConnectedComponents {
         // fused double-double-step costs ~2.7× a single job on a tiny
         // frame — the fixed cost is per STAGE, not per job — and 3.4×
         // on the big first frame, where exchange reuse can't cover the
-        // nested tree. tools/FuseProbe.)
+        // nested tree. SURVEY.md, "Two-phase connected components".)
         while (!converged && iter < maxIterations) {
           if (fp._1 > 0 && fp._1 <= localFinishEdges) {
             log.info(s"cc: local union-find finish over ${fp._1} frontier edges")

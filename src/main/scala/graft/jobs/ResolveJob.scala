@@ -66,7 +66,8 @@ object ResolveJob {
       metrics: Map[String, Long],
       resumedStages: Seq[String],
       /** wall millis per materialized stage, insertion-ordered —
-        * feeds the scaling-profile decomposition in Bench/JobGaps */
+        * feeds Bench's STAGEMS line (the scaling decomposition in
+        * OPTIMIZATION_r06.md, "Scaling") */
       stageMillis: Seq[(String, Long)] = Seq.empty)
 
   def run(spark: SparkSession, docs: DataFrame, cfg: Config = Config()): Result =

@@ -28,10 +28,13 @@ object Confs {
   }
 
   /** Tag every Spark job fired inside `body` with `graft:name` (shows
-    * in the UI and in listener-based profiles like tools.JobGaps).
+    * in the UI and as one row of a `graft.obs.Profile`); the prior
+    * description is restored, so an enclosing tag survives.
     */
   def withJobDesc[T](spark: SparkSession)(name: String)(body: => T): T = {
-    spark.sparkContext.setJobDescription(s"graft:$name")
-    try body finally spark.sparkContext.setJobDescription(null)
+    val sc = spark.sparkContext
+    val prior = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(s"graft:$name")
+    try body finally sc.setJobDescription(prior)
   }
 }

@@ -38,16 +38,15 @@ object Materialize {
     val obs = Observation(s"graft_${name}_${java.util.UUID.randomUUID}")
     val aggs = count(lit(1)).as("rows") +: metrics.map { case (k, c) => c.as(k) }
     val observed = df.observe(obs, aggs.head, aggs.tail: _*)
-    val priorDesc = sc.getLocalProperty("spark.job.description")
-    sc.setJobDescription(s"graft:$name")
-    val out =
-      try dir match {
+    val out = Confs.withJobDesc(spark)(name) {
+      dir match {
         case Some(d) =>
           val path = s"$d/${sc.applicationId}/${name}_${seq.getAndIncrement}"
           observed.write.mode("overwrite").parquet(path)
           spark.read.parquet(path)
         case None => observed.localCheckpoint(true)
-      } finally sc.setJobDescription(priorDesc)
+      }
+    }
     val row = obs.get
     (out, ("rows" +: metrics.map(_._1)).map(k => k -> row(k).asInstanceOf[Number].longValue).toMap)
   }
